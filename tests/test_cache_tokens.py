@@ -460,8 +460,17 @@ def test_largest_group_memoizes_on_data_fingerprint(spark, tmp_path):
         "event_id", F.to_date("ts").alias("day")
     )
     n1, g1 = dp._largest_group(spark, sf, "events", ev, "day")
-    key = (dp._data_fingerprint_token(sf, "events"), "day")
-    assert key in dp._LARGEST_GROUP_CACHE
+    app = spark.sparkContext.applicationId
+    recipe = ("events", "day")
+
+    def entries() -> list:
+        return [
+            k for k in dp._MEMO
+            if k[:3] == ("largest_group", app, sf) and k[4] == recipe
+        ]
+
+    tok = dp._data_fingerprint_token(sf, "events")
+    assert ("largest_group", app, sf, tok, recipe) in dp._MEMO
     # same corpus: the cached tuple is returned (no recompute) even for
     # a df that would give a different answer — proving the cache hit
     empty = ev.filter(F.lit(False))
@@ -479,6 +488,18 @@ def test_largest_group_memoizes_on_data_fingerprint(spark, tmp_path):
     )
     n2, g2 = dp._largest_group(spark, sf, "events", ev2, "day")
     assert g2 == keep_day and n2 == len(pdf2)
+
+    # second regeneration: keep half that day's rows => a third
+    # fingerprint; the superseded entries are evicted, one stays
+    pdf3 = pdf2.iloc[: len(pdf2) // 2]
+    pdf3.to_parquet(ev_path, index=False)
+    ev3 = read_table(spark, sf, "events").select(
+        "event_id", F.to_date("ts").alias("day")
+    )
+    assert dp._largest_group(spark, sf, "events", ev3, "day") == (
+        len(pdf3), keep_day
+    )
+    assert len(entries()) == 1, entries()
 
 
 def test_q189_concurrent_same_token_runs(spark, tmp_path):

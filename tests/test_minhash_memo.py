@@ -13,8 +13,13 @@ pair sets differ by construction.
 from __future__ import annotations
 
 import os
+import sys
+import threading
+import time
+from types import SimpleNamespace
 
 import pandas as pd
+import pytest
 
 from tests.test_q32_engineered_corpus import _corpus, _write_sf
 
@@ -240,16 +245,16 @@ def test_dead_session_entries_evicted_on_insert(spark, tmp_path):
     sf = _write_sf(tmp_path)
     live = dp._minhash_verified_pairs(spark, sf, **_RECIPE)
     live_keys = [
-        k for k in dp._MINHASH_PAIRS_CACHE
-        if k[0] == spark.sparkContext.applicationId
+        k for k in dp._MEMO
+        if k[:2] == ("minhash_pairs", spark.sparkContext.applicationId)
     ]
     assert live_keys, "the live session's build must be cached"
 
-    dead_key = ("app-dead-0001",) + live_keys[0][1:]
-    dp._MINHASH_PAIRS_CACHE[dead_key] = object()
+    dead_key = ("minhash_pairs", "app-dead-0001") + live_keys[0][2:]
+    dp._MEMO[dead_key] = object()
     # Any cold build under the live session triggers eviction-on-insert.
     dp._minhash_verified_pairs(spark, sf, **{**_RECIPE, "threshold": 0.6})
-    assert dead_key not in dp._MINHASH_PAIRS_CACHE, (
+    assert dead_key not in dp._MEMO, (
         "foreign-session entry survived eviction-on-insert"
     )
     assert dp._minhash_verified_pairs(spark, sf, **_RECIPE) is live, (
@@ -276,7 +281,7 @@ def test_stale_fingerprint_entry_evicted_on_insert(spark, tmp_path):
     other_df = dp._minhash_verified_pairs(spark, other, **_RECIPE)
     app = spark.sparkContext.applicationId
     old_keys = [
-        k for k in dp._MINHASH_PAIRS_CACHE if k[0] == app and k[1] == sf
+        k for k in dp._MEMO if k[:3] == ("minhash_pairs", app, sf)
     ]
     assert len(old_keys) == 1
 
@@ -285,7 +290,7 @@ def test_stale_fingerprint_entry_evicted_on_insert(spark, tmp_path):
     _write_docs(sf, docs2)
     dp._minhash_verified_pairs(spark, sf, **_RECIPE)
     keys_now = [
-        k for k in dp._MINHASH_PAIRS_CACHE if k[0] == app and k[1] == sf
+        k for k in dp._MEMO if k[:3] == ("minhash_pairs", app, sf)
     ]
     assert old_keys[0] not in keys_now, (
         "stale-fingerprint entry survived the refill (ADVICE r16 leak)"
@@ -394,3 +399,92 @@ def test_dsir_bucket_memo_hit_equivalence_and_regeneration(spark, tmp_path):
     assert c is not a, (
         "DSIR memo served a stale build after in-place regeneration"
     )
+
+
+def _fake_spark(app_id: str):
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+
+@pytest.fixture
+def fresh_memo(monkeypatch):
+    """The memo module with private, empty storage: fake application
+    IDs must not evict the live test session's entries."""
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import datapipe as dp
+
+    monkeypatch.setattr(dp, "_MEMO", {})
+    monkeypatch.setattr(dp, "_SHARED_BUILD_SECONDS", {})
+    return dp
+
+
+def test_memo_concurrent_fill_and_regeneration_never_raises(fresh_memo):
+    """ADVICE r17 #1: a fill that evicted a key between another
+    thread's membership check and its read raised KeyError. Two threads
+    fill nested entries (the cc -> pairs shape, so a lock held across
+    build() would deadlock) while a third bumps the data version, as an
+    in-place regeneration would. No call may raise, and each must get
+    the value built for its own key."""
+    dp = fresh_memo
+    spark = _fake_spark("app-fake-1")
+    version = [0]
+    calls = [0, 0]
+    errors: list = []
+    stop = threading.Event()
+
+    def fill(i: int) -> None:
+        try:
+            while not stop.is_set():
+                v = version[0]
+
+                def build():
+                    inner = dp._memo(spark, "inner", "sf", v, (), lambda: ("in", v))
+                    return ("out", v, inner)
+
+                got = dp._memo(spark, "outer", "sf", v, (), build)
+                assert got == ("out", v, ("in", v)), got
+                calls[i] += 1
+        except Exception as exc:  # reported below
+            errors.append(exc)
+
+    def regenerate() -> None:
+        while not stop.is_set():
+            version[0] += 1
+            time.sleep(0)
+
+    threads = [threading.Thread(target=fill, args=(i,)) for i in (0, 1)]
+    threads.append(threading.Thread(target=regenerate))
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        time.sleep(2.0)
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=30)
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads), "a memo call hung"
+    assert not errors, errors
+    assert min(calls) > 0 and version[0] > 1
+
+
+def test_memo_fill_drops_other_application_build_seconds(fresh_memo):
+    """ADVICE r17 #2: the build-seconds ledger kept every stopped
+    application's entries forever. A fill under a second application
+    leaves none of the first's, in the ledger or the memo. Nested fills
+    record EXCLUSIVE seconds, each under its own family."""
+    dp = fresh_memo
+    first, second = _fake_spark("app-fake-1"), _fake_spark("app-fake-2")
+
+    def outer():
+        time.sleep(0.05)
+        return dp._memo(first, "inner", "sf", 1, (), lambda: time.sleep(0.2))
+
+    dp._memo(first, "outer", "sf", 1, (), outer)
+    secs = dp.shared_build_seconds("app-fake-1")
+    assert secs["inner"] >= 0.2 and 0.05 <= secs["outer"] < 0.2, secs
+
+    dp._memo(second, "outer", "sf", 1, (), lambda: None)
+    assert [k for k in dp._SHARED_BUILD_SECONDS if k[0] == "app-fake-1"] == []
+    assert [k for k in dp._MEMO if k[1] == "app-fake-1"] == []
+    assert set(dp.shared_build_seconds("app-fake-2")) == {"outer"}

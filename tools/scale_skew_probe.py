@@ -44,16 +44,6 @@ HOT_N = 2000
 HOT_ID0 = 900_000_000
 
 
-def clear(dp) -> None:
-    for c in (
-        dp._MINHASH_PAIRS_CACHE,
-        dp._MINHASH_CC_CACHE,
-        dp._MINHASH_SH_CACHE,
-        dp._MINHASH_SIGS_CACHE,
-    ):
-        c.clear()
-
-
 def build_hot_dir(scaled: str) -> str:
     """documents-only corpus dir: symlinks to the scaled corpus's part
     files plus one extra file of HOT_N identical boilerplate docs."""
@@ -100,7 +90,7 @@ def main() -> None:
         # --- (1) two shuffle layouts over the honest 10x corpus ---
         for parts in ("32", "8"):
             spark.conf.set("spark.sql.shuffle.partitions", parts)
-            clear(dp)
+            dp.clear_memos()
             t0 = time.perf_counter()
             pairs = dp._minhash_verified_pairs(spark, scaled, **RECIPE)
             n = pairs.count()
@@ -116,7 +106,7 @@ def main() -> None:
         # --- (2) planted hot bucket at 10x ---
         hot = build_hot_dir(scaled)
         spark.conf.set("spark.sql.shuffle.partitions", "32")
-        clear(dp)
+        dp.clear_memos()
         t0 = time.perf_counter()
         pairs = dp._minhash_verified_pairs(spark, hot, **RECIPE)
         n_total = pairs.count()

@@ -239,13 +239,7 @@ def main() -> None:
             best = None
             for _ in range(2):
                 if name in MINHASH_MEMO_QUERIES:
-                    _dp._MINHASH_PAIRS_CACHE.clear()
-                    _dp._MINHASH_CC_CACHE.clear()
-                    _dp._MINHASH_SH_CACHE.clear()
-                    _dp._MINHASH_SIGS_CACHE.clear()
-                    _dp._SIMHASH_PAIRS_CACHE.clear()
-                    _dp._ANN_RANKING_CACHE.clear()
-                    _dp._DSIR_BUCKET_CACHE.clear()
+                    _dp.clear_memos()
                 t0 = time.perf_counter()
                 QUERIES[name].spark(spark, sf_dir).write.format("noop").mode(
                     "overwrite"
