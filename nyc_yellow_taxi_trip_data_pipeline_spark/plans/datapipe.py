@@ -1428,12 +1428,9 @@ def q41_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "window", "agg"),
 )
 def q44_streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table_stream
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_to_memory,
     )
 
     stream = read_table_stream(spark, sf_dir, "events")
@@ -1451,20 +1448,7 @@ def q44_streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("window_start"), "n_events", "sum_value"
         )
     )
-    sink = f"q44_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
-    return spark.table(sink)
+    return replay_to_memory(agg, "q44", "complete", 8)
 
 
 # ---------------------------------------------------------------------------
@@ -2243,35 +2227,19 @@ def q66_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "sessionize", "pandas-udf"),
 )
 def q67_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table_stream
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
+        replay_to_memory,
         sessionize_stateful,
-        unload_state_stores,
     )
 
     stream = read_table_stream(spark, sf_dir, "events")
     sessions = sessionize_stateful(stream, gap_seconds=1800)
-    sink = f"q67_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
+    out = replay_to_memory(sessions, "q67", "update", 8)
     # Cumulative emission: the final value per key is the max across
     # batches (single-batch replays emit exactly one row per key).
     return (
-        spark.table(sink)
-        .groupBy("key")
+        out.groupBy("key")
         .agg(
             F.max("n_sessions").alias("n_sessions"),
             F.max("n_events").alias("n_events"),
@@ -2766,12 +2734,9 @@ def q75_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "interval"),
 )
 def q76_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table_stream
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_to_memory,
     )
 
     stream = read_table_stream(spark, sf_dir, "events")
@@ -2801,22 +2766,9 @@ def q76_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             """
         ),
     ).select("event_id", "user_id", "view_id")
-    sink = f"q76_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
+    out = replay_to_memory(joined, "q76", "append", 8)
     return (
-        spark.table(sink)
-        .groupBy("event_id", "user_id")
+        out.groupBy("event_id", "user_id")
         .agg(F.count("view_id").alias("n_preceding_views"))
     )
 
@@ -3147,12 +3099,9 @@ def q79_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "broadcast"),
 )
 def q80_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table_stream
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_to_memory,
     )
 
     stream = read_table_stream(spark, sf_dir, "events").select("user_id", "value")
@@ -3168,20 +3117,7 @@ def q80_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 100.0
         ).alias("sum_value"),
     )
-    sink = f"q80_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
-    return spark.table(sink)
+    return replay_to_memory(agg, "q80", "complete", 8)
 
 
 # ---------------------------------------------------------------------------
@@ -3207,12 +3143,9 @@ def q80_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "dedup", "stateful"),
 )
 def q81_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table_stream
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_to_memory,
     )
 
     once = read_table_stream(spark, sf_dir, "events").select(
@@ -3226,22 +3159,9 @@ def q81_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = twice.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    sink = f"q81_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
+    out = replay_to_memory(deduped, "q81", "append", 8)
     return (
-        spark.table(sink)
-        .groupBy("event_type")
+        out.groupBy("event_type")
         .agg(F.count("*").alias("n_events"))
     )
 
@@ -4215,14 +4135,11 @@ def q94_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "dedup", "join"),
 )
 def q95_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
         read_table_stream,
     )
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_to_memory,
     )
 
     delta = (
@@ -4238,20 +4155,7 @@ def q95_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFra
     )
     accepted = delta.join(F.broadcast(index), "fp", "left_anti")
     agg = accepted.groupBy("source").agg(F.count("*").alias("n_accepted"))
-    sink = f"q95_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
-    return spark.table(sink)
+    return replay_to_memory(agg, "q95", "complete", 8)
 
 
 # ---------------------------------------------------------------------------
@@ -5283,12 +5187,9 @@ def q109_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "window", "agg", "sliding"),
 )
 def q110_streaming_sliding_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table_stream
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_to_memory,
     )
 
     stream = read_table_stream(spark, sf_dir, "events")
@@ -5311,20 +5212,7 @@ def q110_streaming_sliding_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = f"q110_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
-    return spark.table(sink)
+    return replay_to_memory(agg, "q110", "complete", 8)
 
 
 # ---------------------------------------------------------------------------
@@ -6951,8 +6839,7 @@ def q130_streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_to_memory,
     )
 
     ev = read_table(spark, sf_dir, "events").select("event_id", "ts", "value")
@@ -7011,22 +6898,10 @@ def q130_streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_value",
             )
         )
-        sink = f"q130_out_{uuid.uuid4().hex[:8]}"
-        with scoped_shuffle_partitions(spark, 8):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                unload_state_stores(spark)
+        out = replay_to_memory(agg, "q130", "append", 8)
     finally:
         shutil.rmtree(replay_dir, ignore_errors=True)
-    return spark.table(sink)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -7295,12 +7170,9 @@ def q132_vocab_oov_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "watermark", "outer-join"),
 )
 def q133_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table_stream
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_to_memory,
     )
 
     stream = read_table_stream(spark, sf_dir, "events")
@@ -7331,22 +7203,9 @@ def q133_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "left_outer",
     ).select("event_id", "user_id", "view_id")
-    sink = f"q133_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
+    out = replay_to_memory(joined, "q133", "append", 8)
     return (
-        spark.table(sink)
-        .groupBy("event_id", "user_id")
+        out.groupBy("event_id", "user_id")
         .agg(F.count("view_id").cast("long").alias("n_preceding_views"))
     )
 
@@ -7403,12 +7262,9 @@ def q133_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "window", "watermark", "multi-stateful"),
 )
 def q134_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table_stream
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_to_memory,
     )
 
     stream = read_table_stream(spark, sf_dir, "events")
@@ -7445,20 +7301,7 @@ def q134_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_pairs",
         )
     )
-    sink = f"q134_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
-    return spark.table(sink)
+    return replay_to_memory(agg, "q134", "append", 8)
 
 
 # ---------------------------------------------------------------------------
@@ -7568,8 +7411,7 @@ def q135_streaming_dedup_within_watermark(
     import uuid
 
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_to_memory,
     )
 
     ev = read_table(spark, sf_dir, "events").select(
@@ -7620,24 +7462,11 @@ def q135_streaming_dedup_within_watermark(
         dedup = stream.dropDuplicatesWithinWatermark(
             ["user_id", "event_type"]
         ).select("user_id", "event_type")
-        sink = f"q135_out_{uuid.uuid4().hex[:8]}"
-        with scoped_shuffle_partitions(spark, 8):
-            q = (
-                dedup.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                unload_state_stores(spark)
+        out = replay_to_memory(dedup, "q135", "append", 8)
     finally:
         shutil.rmtree(replay_dir, ignore_errors=True)
     per_key = (
-        spark.table(sink)
-        .groupBy("user_id", "event_type")
+        out.groupBy("user_id", "event_type")
         .agg(F.count("*").alias("n_emissions"))
     )
     return per_key.groupBy("event_type").agg(
@@ -9178,8 +9007,7 @@ def q154_streaming_union_watermarks(
     import uuid
 
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_to_memory,
     )
 
     ev = read_table(spark, sf_dir, "events").select("event_id", "ts")
@@ -9235,22 +9063,10 @@ def q154_streaming_union_watermarks(
                 "n_events",
             )
         )
-        sink = f"q154_out_{uuid.uuid4().hex[:8]}"
-        with scoped_shuffle_partitions(spark, 8):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                unload_state_stores(spark)
+        out = replay_to_memory(agg, "q154", "append", 8)
     finally:
         shutil.rmtree(replay_dir, ignore_errors=True)
-    return spark.table(sink)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -9666,8 +9482,7 @@ def q159_streaming_union_watermark_max(
     import uuid
 
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_to_memory,
     )
 
     ev = read_table(spark, sf_dir, "events").select("event_id", "ts")
@@ -9714,28 +9529,16 @@ def q159_streaming_union_watermark_max(
                 "n_events",
             )
         )
-        sink = f"q159_out_{uuid.uuid4().hex[:8]}"
         policy_key = "spark.sql.streaming.multipleWatermarkPolicy"
         prev = spark.conf.get(policy_key, "min")
         spark.conf.set(policy_key, "max")
         try:
-            with scoped_shuffle_partitions(spark, 8):
-                q = (
-                    agg.writeStream.format("memory")
-                    .queryName(sink)
-                    .outputMode("append")
-                    .start()
-                )
-                try:
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
-                    unload_state_stores(spark)
+            out = replay_to_memory(agg, "q159", "append", 8)
         finally:
             spark.conf.set(policy_key, prev)
     finally:
         shutil.rmtree(replay_dir, ignore_errors=True)
-    return spark.table(sink)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -11373,8 +11176,7 @@ def q172_streaming_session_window(
     import uuid
 
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_to_memory,
     )
 
     ev = read_table(spark, sf_dir, "events").select(
@@ -11422,22 +11224,10 @@ def q172_streaming_session_window(
                 "n_events",
             )
         )
-        sink = f"q172_out_{uuid.uuid4().hex[:8]}"
-        with scoped_shuffle_partitions(spark, 8):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                unload_state_stores(spark)
+        out = replay_to_memory(agg, "q172", "append", 8)
     finally:
         shutil.rmtree(replay_dir, ignore_errors=True)
-    return spark.table(sink)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -13183,8 +12973,7 @@ def q190_processing_time_timer_eviction(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_to_memory,
     )
 
     ev = read_table(spark, sf_dir, "events").select("event_id", "user_id")
@@ -13254,7 +13043,6 @@ def q190_processing_time_timer_eviction(
             )
             state.setTimeoutDuration(1)
 
-    sink = f"q190_out_{tok}"
     try:
         # Both phase files written in ONE job (partitionBy over the
         # parity, 2-way repartition => exactly one file per phase dir);
@@ -13289,6 +13077,55 @@ def q190_processing_time_timer_eviction(
                 GroupStateTimeout.ProcessingTimeTimeout,
             )
         )
+
+        def drain_phases(q) -> None:
+            # Drain detection via progress metrics only (py4j-cheap; a
+            # count() poll of the sink would serialize a full job against
+            # every micro-batch): a phase is drained once some batch
+            # carried input rows AND the newest batch reports zero live
+            # state rows — i.e. every key the phase touched has been
+            # timer-evicted.
+            input_rows_by_batch: dict = {}
+
+            def wait_drained(min_input_batches: int, label: str):
+                deadline = time.time() + 120
+                while time.time() < deadline:
+                    for p in q.recentProgress:
+                        if p is None:
+                            continue
+                        bid = p["batchId"]
+                        input_rows_by_batch[bid] = p["numInputRows"]
+                    p = q.lastProgress
+                    fed = sum(
+                        1 for v in input_rows_by_batch.values() if v
+                    )
+                    if (
+                        p is not None
+                        and fed >= min_input_batches
+                        and p.get("stateOperators")
+                        and p["stateOperators"][0]["numRowsTotal"] == 0
+                    ):
+                        return
+                    # 10 ms: the next (empty) micro-batch starts
+                    # back-to-back after the drain batch commits, so
+                    # a coarse poll usually loses the race and pays
+                    # one extra ~0.7 s empty batch before phase B's
+                    # file is discovered; a tight poll sometimes
+                    # wins it (py4j-cheap either way).
+                    time.sleep(0.01)
+                raise AssertionError(
+                    f"q190 {label}: state never drained — "
+                    "processing-time timers did not fire"
+                )
+
+            # Phase A must FULLY drain (every key evicted by an
+            # empty-trigger timer fire) before phase B arrives —
+            # that gap is what makes the per-phase eviction count
+            # deterministic instead of racing the batch clock.
+            wait_drained(1, "phase A")
+            stage_phase(1)
+            wait_drained(2, "phase B")
+
         # ONE state partition: with 16 bucket groups the replay is
         # bound by per-batch fixed cost (state-store commit + python
         # runner handshake per task), not by data — more partitions
@@ -13296,65 +13133,10 @@ def q190_processing_time_timer_eviction(
         # ~4.3 s warm; 64->16 buckets shaved ~0.2 s/batch of per-group
         # state protocol). Production sizes this by key count, not
         # cores.
-        with scoped_shuffle_partitions(spark, 1):
-            q = (
-                evictions.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("update")
-                .start()
-            )
-            try:
-                # Drain detection via progress metrics only (py4j-cheap;
-                # a spark.table(sink).count() poll would serialize a
-                # full job against every micro-batch): a phase is
-                # drained once some batch carried input rows AND the
-                # newest batch reports zero live state rows — i.e.
-                # every key the phase touched has been timer-evicted.
-                input_rows_by_batch: dict = {}
-
-                def wait_drained(min_input_batches: int, label: str):
-                    deadline = time.time() + 120
-                    while time.time() < deadline:
-                        for p in q.recentProgress:
-                            if p is None:
-                                continue
-                            bid = p["batchId"]
-                            input_rows_by_batch[bid] = p["numInputRows"]
-                        p = q.lastProgress
-                        fed = sum(
-                            1 for v in input_rows_by_batch.values() if v
-                        )
-                        if (
-                            p is not None
-                            and fed >= min_input_batches
-                            and p.get("stateOperators")
-                            and p["stateOperators"][0]["numRowsTotal"] == 0
-                        ):
-                            return
-                        # 10 ms: the next (empty) micro-batch starts
-                        # back-to-back after the drain batch commits, so
-                        # a coarse poll usually loses the race and pays
-                        # one extra ~0.7 s empty batch before phase B's
-                        # file is discovered; a tight poll sometimes
-                        # wins it (py4j-cheap either way).
-                        time.sleep(0.01)
-                    raise AssertionError(
-                        f"q190 {label}: state never drained — "
-                        "processing-time timers did not fire"
-                    )
-
-                # Phase A must FULLY drain (every key evicted by an
-                # empty-trigger timer fire) before phase B arrives —
-                # that gap is what makes the per-phase eviction count
-                # deterministic instead of racing the batch clock.
-                wait_drained(1, "phase A")
-                stage_phase(1)
-                wait_drained(2, "phase B")
-            finally:
-                q.stop()
-                unload_state_stores(spark)
         return (
-            spark.table(sink)
+            replay_to_memory(
+                evictions, "q190", "update", 1, drive=drain_phases
+            )
             .groupBy("user_id")
             .agg(
                 F.count("*").cast("long").alias("n_evict"),
@@ -13824,8 +13606,7 @@ def q193_event_time_timer_eviction(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_to_memory,
     )
 
     ev = read_table(spark, sf_dir, "events").select("user_id", "ts")
@@ -13929,7 +13710,6 @@ def q193_event_time_timer_eviction(
                 max(min(d for _, (_, d) in items), wm + 1)
             )
 
-    sink = f"q193_out_{tok}"
     try:
         if not os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
             # Temp sibling + atomic rename, as q190.
@@ -13968,26 +13748,20 @@ def q193_event_time_timer_eviction(
                 GroupStateTimeout.EventTimeTimeout,
             )
         )
+
+        def drain_phases(q) -> None:
+            # Watermark-gated batching: each call drains the staged
+            # phase's data batch plus the one empty eviction batch the
+            # advanced watermark schedules, then returns.
+            q.processAllAvailable()
+            stage_phase(1)
+            q.processAllAvailable()
+
         # ONE state partition — same fixed-cost floor argument as q190.
-        with scoped_shuffle_partitions(spark, 1):
-            q = (
-                evictions.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("update")
-                .start()
-            )
-            try:
-                # Watermark-gated batching: each call drains the staged
-                # phase's data batch plus the one empty eviction batch
-                # the advanced watermark schedules, then returns.
-                q.processAllAvailable()
-                stage_phase(1)
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                unload_state_stores(spark)
         return (
-            spark.table(sink)
+            replay_to_memory(
+                evictions, "q193", "update", 1, drive=drain_phases
+            )
             .groupBy("user_id")
             .agg(
                 F.count("*").cast("long").alias("n_evict"),

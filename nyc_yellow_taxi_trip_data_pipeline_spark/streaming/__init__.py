@@ -5,8 +5,8 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
     hourly_windowed_agg,
     parse_json_envelope,
     read_stream,
+    replay_to_memory,
     session_windowed_agg,
-    start_memory_sink,
     start_parquet_sink,
 )
 
@@ -15,7 +15,7 @@ __all__ = [
     "hourly_windowed_agg",
     "parse_json_envelope",
     "read_stream",
+    "replay_to_memory",
     "session_windowed_agg",
-    "start_memory_sink",
     "start_parquet_sink",
 ]

@@ -19,6 +19,7 @@ stateless; this layer keeps its exact pipeline shape but:
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Callable
 from contextlib import contextmanager
 
@@ -184,16 +185,45 @@ def unload_state_stores(spark: SparkSession) -> None:
         pass
 
 
-def start_memory_sink(
-    df: DataFrame, name: str, output_mode: str = "append"
-) -> StreamingQuery:
-    """Memory sink for tests/smoke: drive with processAllAvailable()."""
-    return (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .start()
-    )
+def replay_to_memory(
+    df: DataFrame,
+    name: str,
+    output_mode: str,
+    partitions: int,
+    drive: Callable[[StreamingQuery], None] | None = None,
+) -> DataFrame:
+    """Run a bounded streaming query into a memory sink and return its rows.
+
+    The one harness for every bounded replay: the query starts under
+    ``scoped_shuffle_partitions(partitions)`` (its state-partition count),
+    ``drive(q)`` runs it to completion (default ``q.processAllAvailable()``),
+    and ``stop()`` + ``unload_state_stores`` run even when ``drive`` raises.
+    The sink's temp view is dropped before returning: the returned
+    DataFrame's analyzed plan holds the sink's ``MemoryPlan`` itself, so it
+    still collects, aggregates and writes, and the sink's rows are freed
+    with it instead of staying registered for the session's life.
+    """
+    spark = df.sparkSession
+    sink = f"{name}_out_{uuid.uuid4().hex[:8]}"
+    try:
+        with scoped_shuffle_partitions(spark, partitions):
+            q = (
+                df.writeStream.format("memory")
+                .queryName(sink)
+                .outputMode(output_mode)
+                .start()
+            )
+            try:
+                if drive is None:
+                    q.processAllAvailable()
+                else:
+                    drive(q)
+            finally:
+                q.stop()
+                unload_state_stores(spark)
+        return spark.table(sink)
+    finally:
+        spark.catalog.dropTempView(sink)
 
 
 def start_parquet_sink(

@@ -224,6 +224,22 @@ def test_q130_late_drops_actually_happen(spark):
     assert all(r.window_start_ms % 3600000 == 0 for r in rows)
 
 
+def test_streaming_replays_release_their_sinks(spark):
+    """A long-lived session stays bounded: two reps each of two bounded
+    replays leave no memory-sink temp view and no active streaming query
+    behind, and each rep returns the same rows."""
+    names = ["q44_streaming_hourly", "q130_streaming_late_drop"]
+    results = {n: [] for n in names}
+    for _ in range(2):
+        for n in names:
+            results[n].append(sorted(QUERIES[n].spark(spark, SF_DIR).collect()))
+    left = [t.name for t in spark.catalog.listTables() if "_out_" in t.name]
+    assert left == []
+    assert spark.streams.active == []
+    for n, (first, second) in results.items():
+        assert first == second, n
+
+
 def test_q131_cogroup_covers_all_orderkeys(spark):
     """Conservation: presence-class key counts sum to the distinct union
     of order keys across both tables, and lineitem rows are all

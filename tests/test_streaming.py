@@ -17,8 +17,8 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.streaming import (
     hourly_windowed_agg,
     parse_json_envelope,
     read_stream,
+    replay_to_memory,
     session_windowed_agg,
-    start_memory_sink,
 )
 
 TRIP_SCHEMA = T.StructType(
@@ -60,15 +60,12 @@ def test_file_stream_applies_batch_transforms(spark, trip_json_dir):
     stream = read_stream(spark, "json", schema=TRIP_SCHEMA, path=trip_json_dir)
     assert stream.isStreaming
     cleaned = add_trip_features(parse_timestamps(stream))
-    q = start_memory_sink(cleaned, "cleaned_stream")
-    try:
-        q.processAllAvailable()
-        out = spark.sql(
-            "SELECT trip_duration, pickup_timeofday, fare_per_mile "
-            "FROM cleaned_stream ORDER BY trip_duration"
-        ).collect()
-    finally:
-        q.stop()
+    out = (
+        replay_to_memory(cleaned, "cleaned_stream", "append", 4)
+        .select("trip_duration", "pickup_timeofday", "fare_per_mile")
+        .orderBy("trip_duration")
+        .collect()
+    )
     assert [r.trip_duration for r in out] == [30.0, 30.0]
     assert {r.pickup_timeofday for r in out} == {"morning"}
     assert sorted(r.fare_per_mile for r in out) == [5.0, 5.0]
@@ -91,12 +88,7 @@ def test_json_envelope_parse_matches_kafka_shape(spark, tmp_path):
     parsed = parse_json_envelope(
         stream.select(F.col("value").cast("binary").alias("value")), TRIP_SCHEMA
     )
-    q = start_memory_sink(parsed, "envelope_out")
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM envelope_out").collect()
-    finally:
-        q.stop()
+    rows = replay_to_memory(parsed, "envelope", "append", 4).collect()
     assert len(rows) == 1
     assert rows[0]["fare_amount"] == 5.0
     assert set(parsed.columns) == {f.name for f in TRIP_SCHEMA.fields}
@@ -120,15 +112,10 @@ def test_windowed_agg_with_watermark(spark, tmp_path):
     (d / "b.json").write_text("\n".join(json.dumps(r) for r in rows))
     stream = read_stream(spark, "json", schema=events_schema, path=str(d))
     agg = hourly_windowed_agg(stream)
-    q = start_memory_sink(agg, "hourly_out", output_mode="complete")
-    try:
-        q.processAllAvailable()
-        out = {
-            r.window_start.isoformat(): (r.n_events, r.sum_value)
-            for r in spark.sql("SELECT * FROM hourly_out").collect()
-        }
-    finally:
-        q.stop()
+    out = {
+        r.window_start.isoformat(): (r.n_events, r.sum_value)
+        for r in replay_to_memory(agg, "hourly", "complete", 4).collect()
+    }
     assert out["2024-01-01T10:00:00"] == (2, 3.0)
     assert out["2024-01-01T11:00:00"] == (1, 4.0)
 
@@ -150,14 +137,12 @@ def test_session_window_gap(spark, tmp_path):
     (d / "b.json").write_text("\n".join(json.dumps(r) for r in rows))
     stream = read_stream(spark, "json", schema=events_schema, path=str(d))
     agg = session_windowed_agg(stream)
-    q = start_memory_sink(agg, "sessions_out", output_mode="complete")
-    try:
-        q.processAllAvailable()
-        rows_out = spark.sql(
-            "SELECT n_events FROM sessions_out ORDER BY session_start"
-        ).collect()
-    finally:
-        q.stop()
+    rows_out = (
+        replay_to_memory(agg, "sessions", "complete", 4)
+        .orderBy("session_start")
+        .select("n_events")
+        .collect()
+    )
     assert [r.n_events for r in rows_out] == [2, 1]
 
 
@@ -204,22 +189,18 @@ def test_stateful_running_totals_across_batches(spark, tmp_path):
     )
     stream = read_stream(spark, "json", schema=events_schema, path=str(d))
     totals = running_totals_stateful(stream, key_col="user_id")
-    q = (
-        totals.writeStream.format("memory")
-        .queryName("state_out")
-        .outputMode("append")
-        .start()
-    )
-    try:
+
+    def two_batches(q):
         q.processAllAvailable()
         # second micro-batch: user 1 adds more -> state must accumulate
         (d / "b1.json").write_text(_json.dumps({"user_id": 1, "value": 7.0}))
         q.processAllAvailable()
-        rows = spark.sql(
-            "SELECT * FROM state_out ORDER BY events_so_far"
-        ).collect()
-    finally:
-        q.stop()
+
+    rows = (
+        replay_to_memory(totals, "state", "append", 4, drive=two_batches)
+        .orderBy("events_so_far")
+        .collect()
+    )
     by_key = {}
     for r in rows:  # last emission per key wins
         by_key[r.key] = (r.events_so_far, r.sum_so_far)
@@ -260,13 +241,8 @@ def test_stateful_sessionize_across_batches(spark, tmp_path):
     )
     stream = read_stream(spark, "json", schema=schema, path=str(d))
     sessions = sessionize_stateful(stream, gap_seconds=1800)
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("sess_state_out")
-        .outputMode("update")
-        .start()
-    )
-    try:
+
+    def two_batches(q):
         q.processAllAvailable()
         # batch 2: user 1 continues within 20 min of event 3 (same session);
         # user 2 returns after 4 hours (new session)
@@ -280,9 +256,10 @@ def test_stateful_sessionize_across_batches(spark, tmp_path):
             )
         )
         q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM sess_state_out").collect()
-    finally:
-        q.stop()
+
+    rows = replay_to_memory(
+        sessions, "sess_state", "update", 4, drive=two_batches
+    ).collect()
     final = {}
     for r in rows:  # cumulative: max per key is the final value
         cur = final.get(r.key, (0, 0))
@@ -374,15 +351,10 @@ def test_watermark_drops_late_rows_across_batches(spark, tmp_path):
         options={"maxFilesPerTrigger": "1", "latestFirst": "false"},
     )
     agg = hourly_windowed_agg(stream, watermark="30 minutes")
-    q = start_memory_sink(agg, "late_out", output_mode="append")
-    try:
-        q.processAllAvailable()
-        rows = {
-            r.window_start.isoformat(): (r.n_events, r.sum_value)
-            for r in spark.sql("SELECT * FROM late_out").collect()
-        }
-    finally:
-        q.stop()
+    rows = {
+        r.window_start.isoformat(): (r.n_events, r.sum_value)
+        for r in replay_to_memory(agg, "late", "append", 4).collect()
+    }
     # Only the 10:00 window is finalized; the late 10:40/99.0 row is NOT
     # in it. The 12:00 window stays open (watermark 12:00 < its end).
     assert rows == {"2024-01-01T10:00:00": (2, 3.0)}
@@ -398,19 +370,53 @@ def test_rate_source_produces_rows(spark):
         spark, "rate", options={"rowsPerSecond": "50"}
     )
     assert dict(stream.dtypes) == {"timestamp": "timestamp", "value": "bigint"}
-    q = start_memory_sink(stream, "rate_out")
-    try:
+
+    def poll(q):
         deadline = time.time() + 15
-        n = 0
         while time.time() < deadline:
             q.processAllAvailable()
-            n = spark.sql("SELECT count(*) AS n FROM rate_out").first().n
-            if n > 0:
+            if spark.table(q.name).count() > 0:
                 break
             time.sleep(0.5)
-    finally:
-        q.stop()
+
+    n = replay_to_memory(stream, "rate", "append", 4, drive=poll).count()
     assert n > 0, "rate source produced no rows within 15s"
+
+
+def test_replay_to_memory_drives_once_and_releases_sink(spark, tmp_path):
+    """The bounded-replay harness: ``drive`` runs exactly once, the sink's
+    temp view is gone on return while the returned DataFrame still
+    collects, and a raising ``drive`` still stops the query, restores the
+    shuffle-partition setting and propagates."""
+    src = str(tmp_path / "range_in")
+    spark.range(10).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def sink_views():
+        tables = spark.catalog.listTables()
+        return [t.name for t in tables if "helper_out_" in t.name]
+
+    calls = []
+
+    def drive(q):
+        calls.append(q.name)
+        q.processAllAvailable()
+
+    out = replay_to_memory(stream, "helper", "append", 2, drive=drive)
+    assert len(calls) == 1 and calls[0].startswith("helper_out_")
+    assert sink_views() == []
+    assert sorted(r.id for r in out.collect()) == list(range(10))
+
+    def failing(q):
+        q.processAllAvailable()
+        raise RuntimeError("drive failed")
+
+    with pytest.raises(RuntimeError, match="drive failed"):
+        replay_to_memory(stream, "helper", "append", 2, drive=failing)
+    assert spark.streams.active == []
+    assert sink_views() == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
 
 
 def test_real_testdata_streams_with_watermark(spark):

@@ -78,6 +78,9 @@ def test_read_table_stream_multifile_directory(spark, tmp_path):
         read_table,
         read_table_stream,
     )
+    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
+        replay_to_memory,
+    )
 
     sf = str(tmp_path)
     src = read_table(spark, "/root/testdata/sf0.001", "events")
@@ -85,14 +88,5 @@ def test_read_table_stream_multifile_directory(spark, tmp_path):
     n_expected = src.count()
 
     stream = read_table_stream(spark, sf, "events")
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("canary_multifile")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert spark.table("canary_multifile").count() == n_expected
+    out = replay_to_memory(stream, "canary_multifile", "append", 4)
+    assert out.count() == n_expected
